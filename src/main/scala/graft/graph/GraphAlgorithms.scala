@@ -8,12 +8,17 @@ import scala.collection.mutable.ArrayBuffer
 
 /** Graph algorithms over edge DataFrames — the GDS-plugin capability
   * surface (SURVEY.md §2.10: installed in the reference, no scripted
-  * calls; parity target is capability, via GraphX).
+  * calls; parity target is capability).
   *
-  * Inputs/outputs are DataFrames; GraphX (RDD-based Pregel) runs the
-  * iterative core. String vertex ids are dictionary-encoded to longs
-  * with a deterministic first-seen index, never hashed (no collision
-  * risk at 10^11 vertices).
+  * Inputs/outputs are DataFrames. The `*DF` analytics iterate as
+  * plain DataFrame joins and aggregates — the min-propagation family
+  * (CC, the SCC peel, BFS, weighted shortest paths) through one
+  * operator, [[minPropagate]] — each with a driver-local fast path
+  * below `localThreshold`. GraphX (RDD-based Pregel) remains only as
+  * the reference implementation behind [[connectedComponents]],
+  * [[pageRank]] and [[labelPropagation]], whose string vertex ids are
+  * dictionary-encoded to longs with a deterministic first-seen index,
+  * never hashed (no collision risk at 10^11 vertices).
   *
   * Scale notes: connected components is the dedup-clustering closure
   * over candidate pairs — the pair list is orders of magnitude
@@ -166,7 +171,7 @@ object GraphAlgorithms {
     * exactly once. Sorted range partitions stay globally ordered
     * through AQE coalescing (adjacent ranges merge), so the
     * per-partition offset ranks are the global sort ranks. */
-  private def orderedVertexDict(verts: DataFrame): DataFrame = {
+  private[graft] def orderedVertexDict(verts: DataFrame): DataFrame = {
     val spark = verts.sparkSession
     import spark.implicits._
     val sorted = verts.toDF("sid").sort("sid")
@@ -192,6 +197,75 @@ object GraphAlgorithms {
       (edgeCount / perPartition).toInt + 1))
     spark.conf.set(key, math.max(4, p).toString)
     try body finally spark.conf.set(key, prev)
+  }
+
+  /** Monotone min-propagation to a fixpoint — the one distributed
+    * loop behind connected components, the SCC peel's forward and
+    * backward reach, and (weighted) shortest paths. Pregel on
+    * dataflow: each round is one vertex ⨝ message join plus a
+    * group-by min combine.
+    *
+    * `init` is the state (id, v) over the whole vertex domain, v =
+    * null meaning unreached. `edges` is (a, b[, w]), oriented along
+    * message flow a → b and prepared by the caller (width, layout,
+    * orientation); a message is v(a), or v(a) + w when a `w` column
+    * is present. The update is v ← least(v, min msg).
+    *
+    * DELTA-SOURCED messages (r15 opt, guide §2.3): values only ever
+    * decrease, so an unchanged row's messages are already folded into
+    * its neighbors — each round joins the edges against last round's
+    * changed rows only (a lazy filtered scan of the round checkpoint,
+    * no extra job; round 1 sends from every reached row). Exact at
+    * EVERY round, not just at the fixpoint: the state after round i is
+    * the synchronous min over paths of ≤ i edges, which is what keeps
+    * maxIter truncation identical to the driver-local replays.
+    *
+    * The chg flag rides the round's checkpoint (louvainDF's trick):
+    * the convergence test is a `limit(1)` scan of materialized
+    * partitions, not a re-join against the previous round.
+    *
+    * `jump` adds pointer-doubling (lbl(v) ← least(lbl(v), lbl(lbl(v))))
+    * after each edge hop, for reachability labels that are themselves
+    * vertex ids: lbl(v) reaches v and lbl(lbl(v)) reaches lbl(v), so
+    * the composed hop is a real reachability and labels cross 2^i hops
+    * after i rounds — O(log diameter) rounds, not O(diameter). The hop
+    * is checkpointed on its own before the self-join. A heavier
+    * variant (broadcast frontier + delta pointer-doubling with
+    * trigger-set bookkeeping) was MEASURED WORSE same-window (xdist_scc
+    * 22.4 → 31.4 s at 1.2M edges: ~5 extra driver jobs per round
+    * outweigh the avoided exchanges), so the doubling stays full.
+    *
+    * Returns (final state, converged within maxIter). */
+  private def minPropagate(edges: DataFrame, init: DataFrame,
+      maxIter: Int, jump: Boolean = false): (DataFrame, Boolean) = {
+    val msg =
+      if (edges.columns.contains("w")) col("v") + col("w") else col("v")
+    var state = init
+    var chg = init.where(col("v").isNotNull)
+    var converged = false
+    var i = 0
+    while (!converged && i < maxIter) {
+      val nbr = edges.join(chg.select(col("id").as("a"), col("v")), "a")
+        .groupBy(col("b").as("id")).agg(min(msg).as("nbr"))
+      // least skips nulls: an unreached row takes its first message
+      val hop = state.withColumnRenamed("v", "old")
+        .join(nbr, Seq("id"), "left")
+        .select(col("id"), least(col("old"), col("nbr")).as("v"), col("old"))
+      val relaxed = if (!jump) hop else {
+        val h = hop.localCheckpoint(eager = true)
+        h.join(h.select(col("id").as("_p"), col("v").as("_pv")),
+            col("v") === col("_p"), "left")
+          .select(col("id"), least(col("v"), col("_pv")).as("v"), col("old"))
+      }
+      val next = relaxed
+        .select(col("id"), col("v"), (!(col("v") <=> col("old"))).as("chg"))
+        .localCheckpoint(eager = true) // truncate the iterative lineage
+      converged = next.where(col("chg")).limit(1).count() == 0
+      state = next.select("id", "v")
+      chg = next.where(col("chg")).select("id", "v")
+      i += 1
+    }
+    (state, converged)
   }
 
   /** Connected components over an undirected string-keyed pair list.
@@ -284,7 +358,7 @@ object GraphAlgorithms {
       // 4.5 → 9.5 s, xdist_cc_10m 15.3 → 24.5 s encoded). The SCC
       // peel, whose two doubling fixpoints run 14+ rounds, is where
       // the encoding pays (see stronglyConnectedComponentsDF).
-      // The undirected edge frame is joined on `b` EVERY round of the
+      // The undirected edge frame is joined on `a` EVERY round of the
       // fixpoint; hash-partition it on the join key once and
       // checkpoint (LogicalRDD preserves outputPartitioning), so each
       // round's join exchanges only the round's label frame, never
@@ -293,39 +367,11 @@ object GraphAlgorithms {
       val und = partitionedCheckpoint(
         edgesSmall.toDF("a", "b")
           .unionByName(edgesSmall.toDF("b", "a").select(col("a"), col("b"))),
-        "b")
-      val labels0 = und.select(col("a").as("id")).distinct()
-        .withColumn("component", col("id")).cache()
-      var labels = labels0
-      // delta-sourced hop (SCC minProp's r15 trick): labels only ever
-      // decrease, so an unchanged neighbor's contribution is already
-      // folded in — the round join only needs edges out of last
-      // round's changed set (a lazy filtered scan of the checkpoint,
-      // no extra job; round 1 seeds it with everything)
-      var chgRows = labels
-      var converged = false
-      var i = 0
-      while (!converged && i < maxIter) {
-        val nbrMin = und.join(chgRows.withColumnRenamed("id", "b"), "b")
-          .groupBy(col("a").as("id")).agg(min("component").as("nbr"))
-        // The chg flag rides the round's checkpoint (SCC minProp's
-        // trick): the convergence test is a scan of materialized
-        // partitions, not a THIRD V-sized join re-shuffling `next`
-        // against the previous labels (r15 opt, guide §2.4 — the old
-        // shape paid join+exchange per round purely to ask "anything
-        // changed?"; the answer is already in the row being built).
-        val newLbl = least(col("old"), coalesce(col("nbr"), col("old")))
-        val next = labels.withColumnRenamed("component", "old")
-          .join(nbrMin, Seq("id"), "left")
-          .select(col("id"), newLbl.as("component"),
-            (newLbl =!= col("old")).as("chg"))
-          .localCheckpoint(eager = true) // truncate the iterative lineage
-        val changed = next.where(col("chg")).limit(1).count()
-        labels = next.select("id", "component")
-        chgRows = next.where(col("chg")).select("id", "component")
-        converged = changed == 0
-        i += 1
-      }
+        "a")
+      // symmetric edges: the `b` column holds every vertex
+      val labels0 = und.select(col("b").as("id")).distinct()
+        .withColumn("v", col("id")).cache()
+      val (labels, converged) = minPropagate(und, labels0, maxIter)
       labels0.unpersist()
       und.unpersist()
       edgesSmall.unpersist()
@@ -334,7 +380,7 @@ object GraphAlgorithms {
       if (!converged) throw new IllegalStateException(
         s"connectedComponentsDF did not converge in $maxIter rounds; " +
           "raise maxIter (rounds needed = max component diameter)")
-      labels
+      labels.withColumnRenamed("v", "component")
     }
   }
 
@@ -662,16 +708,11 @@ object GraphAlgorithms {
     * calls exist, so the parity target is capability).
     *
     * Returns (id, distance) for every vertex reachable from `sources`
-    * within `maxDepth` hops (sources at distance 0). Level-synchronous
-    * frontier expansion: each round is ONE equi-join (frontier ⨝
-    * edges, shuffled on the fixed-width vertex id) + an anti-join
-    * against the visited set — plain Catalyst/AQE-sized shuffles, no
-    * Pregel fixed cost, same rationale as [[connectedComponentsDF]].
-    * Work per round is O(edges incident to the frontier); the visited
-    * anti-join keeps the frontier monotonically shrinking, so total
-    * work is O(E) over the run. `localCheckpoint` truncates the
-    * iterative lineage (round k's plan would otherwise embed all
-    * k-1 predecessors).
+    * within `maxDepth` hops (sources at distance 0). This is the
+    * unit-weight case of [[weightedShortestPathsDF]]: its round i
+    * settles every path of ≤ i edges, which at unit weight is the
+    * level-synchronous BFS frontier, so `maxDepth` truncates exactly
+    * like a depth-bounded BFS.
     */
   def shortestPathsDF(edges: DataFrame, src: String, dst: String,
       sources: Seq[String], maxDepth: Int = 30,
@@ -694,62 +735,10 @@ object GraphAlgorithms {
   def shortestPathsDF(edges: DataFrame, src: String, dst: String,
       sources: DataFrame, maxDepth: Int,
       directed: Boolean, localThreshold: Long): DataFrame = {
-    val spark = edges.sparkSession
-    val e = edges.select(col(src).cast("string").as("a"),
-      col(dst).cast("string").as("b"))
-    val und = (if (directed) e
-      else e.unionByName(e.select(col("b").as("a"), col("a").as("b"))))
-      .cache()
-    // Small-graph fast path (louvainDF/bfsSigmaDF discipline): joint
-    // multi-source BFS is one wave over the collected adjacency —
-    // integer distances, bit-exact vs the distributed loop. The seed
-    // set is collected only under the same bounded gate; the
-    // DataFrame-seeds contract for corpus-scale graphs is unchanged.
-    // `localThreshold <= 0` disables the local path entirely (parity
-    // tests and memory-constrained drivers).
-    if (localThreshold > 0 && und.count() <= localThreshold) {
-      val seeds = sources
-        .select(col(sources.columns.head).cast("string")).distinct()
-        .collect().map(_.getString(0))
-      val adj = scala.collection.mutable.Map
-        .empty[String, ArrayBuffer[String]]
-      und.collect().foreach { r =>
-        adj.getOrElseUpdate(r.getString(0), ArrayBuffer.empty) +=
-          r.getString(1)
-      }
-      und.unpersist()
-      val dist = scala.collection.mutable.Map.empty[String, Int]
-      seeds.foreach(s => dist(s) = 0)
-      var frontier: Seq[String] = seeds.toSeq
-      var depth = 0
-      while (depth < maxDepth && frontier.nonEmpty) {
-        depth += 1
-        val next = scala.collection.mutable.ArrayBuffer.empty[String]
-        for (u <- frontier; v <- adj.getOrElse(u, ArrayBuffer.empty))
-          if (!dist.contains(v)) { dist(v) = depth; next += v }
-        frontier = next.distinct.toSeq
-      }
-      import spark.implicits._
-      return spark.createDataset(dist.toSeq).toDF("id", "distance")
-    }
-    var visited = sources
-      .select(col(sources.columns.head).cast("string").as("id")).distinct()
-      .withColumn("distance", lit(0))
-      .localCheckpoint(eager = true)
-    var frontier = visited
-    var depth = 0
-    while (depth < maxDepth && frontier.limit(1).count() > 0) {
-      depth += 1
-      val next = und.join(frontier.withColumnRenamed("id", "a"), "a")
-        .select(col("b").as("id")).distinct()
-        .join(visited, Seq("id"), "left_anti")
-        .withColumn("distance", lit(depth))
-        .localCheckpoint(eager = true)
-      visited = visited.unionByName(next).localCheckpoint(eager = true)
-      frontier = next
-    }
-    und.unpersist()
-    visited
+    val unit = "_unit_w"
+    weightedShortestPathsDF(edges.withColumn(unit, lit(1L)), src, dst, unit,
+      sources, maxDepth, directed, localThreshold)
+      .select(col("id"), col("dist").cast("int").as("distance"))
   }
 
   /** DataFrame-native weighted single-source shortest path (GDS
@@ -757,13 +746,13 @@ object GraphAlgorithms {
     * integer weights; returns (id, dist) for every vertex reachable
     * from `sources` (sources at dist 0).
     *
-    * Bellman-Ford relaxation with convergence early-exit: each round
-    * is one equi-join (current distances ⨝ edges, shuffled on the
-    * fixed-width vertex id) + a min-aggregate — no priority queue,
-    * which is the right trade distributed: a global PQ serializes on
-    * the driver, while whole-frontier relaxation is embarrassingly
-    * parallel and settles in (shortest-path hop diameter) rounds.
-    * Each round's plan is checkpoint-truncated. `maxIter` is the
+    * Bellman-Ford relaxation with convergence early-exit, run by
+    * [[minPropagate]]: each round is one equi-join (changed distances
+    * ⨝ edges, shuffled on the fixed-width vertex id) + a min-aggregate
+    * — no priority queue, which is the right trade distributed: a
+    * global PQ serializes on the driver, while whole-frontier
+    * relaxation is embarrassingly parallel and settles in
+    * (shortest-path hop diameter) rounds. `maxIter` is the
     * Bellman-Ford bound — exact once maxIter ≥ V−1 (or the hop
     * diameter, usually far smaller); rounds stop as soon as no
     * distance improves.
@@ -782,7 +771,9 @@ object GraphAlgorithms {
   /** Distributed-sources variant (see [[shortestPathsDF]]'s DataFrame
     * overload): seeds stay a DataFrame end-to-end, matching GDS
     * dijkstra's server-side node-set sources. `sources`' first column
-    * is the seed vertex set.
+    * is the seed vertex set. The vertex domain is the edge endpoints ∪
+    * the seeds: a seed absent from the edge list is still returned at
+    * dist 0.
     */
   def weightedShortestPathsDF(edges: DataFrame, src: String, dst: String,
       weight: String, sources: DataFrame, maxIter: Int,
@@ -793,18 +784,19 @@ object GraphAlgorithms {
     val und = (if (directed) e
       else e.unionByName(e.select(col("b").as("a"), col("a").as("b"), col("w"))))
       .cache()
+    val seeds = sources
+      .select(col(sources.columns.head).cast("string").as("id")).distinct()
     // Small-graph fast path (louvainDF/bfsSigmaDF discipline):
     // driver-local SYNCHRONOUS Bellman-Ford over the collected
     // weighted adjacency — the same round semantics as the
     // distributed loop (round i settles min over paths of ≤ i edges;
     // maxIter truncation included, which the spec pins), so integer
     // distances agree bit-for-bit in both the converged and the
-    // maxIter-bounded cases. `localThreshold <= 0` disables the local
-    // path entirely (parity tests and memory-constrained drivers).
+    // maxIter-bounded cases. Like the distributed loop it relaxes only
+    // out of the vertices that changed last round (O(E) at unit
+    // weight). `localThreshold <= 0` disables the local path entirely
+    // (parity tests and memory-constrained drivers).
     if (localThreshold > 0 && und.count() <= localThreshold) {
-      val seeds = sources
-        .select(col(sources.columns.head).cast("string")).distinct()
-        .collect().map(_.getString(0))
       val adj = scala.collection.mutable.Map
         .empty[String, ArrayBuffer[(String, Long)]]
       und.collect().foreach { r =>
@@ -812,44 +804,35 @@ object GraphAlgorithms {
           ((r.getString(1), r.getLong(2)))
       }
       und.unpersist()
-      var distM = scala.collection.mutable.Map.empty[String, Long]
-      seeds.foreach(s => distM(s) = 0L)
-      var converged = false
+      val dist = scala.collection.mutable.Map.empty[String, Long]
+      var changed: Iterable[String] = seeds.collect().map(_.getString(0))
+      changed.foreach(s => dist(s) = 0L)
       var i = 0
-      while (!converged && i < maxIter) {
+      while (changed.nonEmpty && i < maxIter) {
         i += 1
-        val next = scala.collection.mutable.Map.empty[String, Long] ++ distM
-        for ((u, du) <- distM; (v, w) <- adj.getOrElse(u, ArrayBuffer.empty)) {
+        // every relaxation reads last round's distances: collect the
+        // improvements first, apply them after
+        val upd = scala.collection.mutable.Map.empty[String, Long]
+        for (u <- changed; du = dist(u);
+             (v, w) <- adj.getOrElse(u, ArrayBuffer.empty)) {
           val nd = du + w
-          if (next.get(v).forall(nd < _)) next(v) = nd
+          if (nd < upd.getOrElse(v, dist.getOrElse(v, Long.MaxValue)))
+            upd(v) = nd
         }
-        converged = next == distM
-        distM = next
+        dist ++= upd
+        changed = upd.keys
       }
       import spark.implicits._
-      return spark.createDataset(distM.toSeq).toDF("id", "dist")
+      return spark.createDataset(dist.toSeq).toDF("id", "dist")
     }
-    var dist = sources
-      .select(col(sources.columns.head).cast("string").as("id")).distinct()
-      .withColumn("dist", lit(0L))
+    // vertex domain = endpoints ∪ seeds, unreached = null
+    val init = und.select(col("a").as("id"))
+      .unionByName(und.select(col("b").as("id"))).distinct()
+      .join(seeds.withColumn("v", lit(0L)), Seq("id"), "full")
       .localCheckpoint(eager = true)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      i += 1
-      val relaxed = und.join(dist.withColumnRenamed("id", "a"), "a")
-        .select(col("b").as("id"), (col("dist") + col("w")).as("dist"))
-        .unionByName(dist)
-        .groupBy("id").agg(min("dist").as("dist"))
-        .localCheckpoint(eager = true)
-      converged = relaxed.as("n")
-        .join(dist.as("o"), col("n.id") === col("o.id"), "left")
-        .where(col("o.dist").isNull || col("n.dist") < col("o.dist"))
-        .limit(1).count() == 0
-      dist = relaxed
-    }
+    val (dist, _) = minPropagate(und, init, maxIter)
     und.unpersist()
-    dist
+    dist.where(col("v").isNotNull).select(col("id"), col("v").as("dist"))
   }
 
   /** Per-vertex triangle counts over an undirected string-keyed edge
@@ -1257,8 +1240,7 @@ object GraphAlgorithms {
       // eager per-pass repartition+sort of the 2|E|-row frame buys
       // almost nothing downstream — the r11 "graph-sized shuffle
       // widths lose here" conclusion extends to recorded-layout
-      // checkpoints. REVERTED to the bare cache; plan dump of one
-      // gain-scan round committed as plans/r16/xdist_louvain_round.txt.
+      // checkpoints. REVERTED to the bare cache.
       val und = edges.select(col("x").as("n"), col("y").as("m"), col("w"))
         .unionByName(edges.select(col("y").as("n"), col("x").as("m"), col("w")))
         .cache()
@@ -1468,21 +1450,46 @@ object GraphAlgorithms {
     }
   }
 
-  /** Betweenness centrality (GDS `gds.betweenness` parity), sampled
-    * Brandes, DataFrame-native. `sources` is the pivot set as a
-    * DataFrame (first column) — the distributed-seed shape; exact
-    * betweenness = pass every vertex. Forward phase: one multi-source
-    * BFS keyed (source, vertex) accumulating σ (shortest-path counts,
-    * exact longs) layer by layer — one equi-join + partial-agg per
-    * layer, all sources advance together. Backward phase: dependency
-    * accumulation δ from the deepest layer up, one join per layer.
-    * σ stays integral; δ is rational so the final score is a double,
-    * rounded to `scale` decimals for run-stable output.
-    *
-    * Returns (id, betweenness) — raw ordered-pair dependency sums
-    * (GDS convention; undirected symmetric pairs are counted twice,
-    * callers sampling k of n sources scale by n/k).
-    */
+  /** Collected (a, b) adjacency of a small edge frame, for the
+    * driver-local σ-BFS fast paths. */
+  private def localAdjacency(und: DataFrame)
+      : java.util.HashMap[String, Array[String]] = {
+    val tmp = scala.collection.mutable.Map.empty[String, ArrayBuffer[String]]
+    und.collect().foreach { r =>
+      tmp.getOrElseUpdate(r.getString(0), ArrayBuffer.empty) += r.getString(1)
+    }
+    val adj = new java.util.HashMap[String, Array[String]]()
+    tmp.foreach { case (k, v) => adj.put(k, v.toArray) }
+    adj
+  }
+
+  /** Driver-local forward σ-BFS from `s` — the Brandes forward phase
+    * shared by [[bfsSigmaDF]]'s and [[betweennessDF]]'s fast paths.
+    * Returns (dist, σ, layers): hop distance and exact shortest-path
+    * count for every vertex within `maxDepth` hops, and the BFS
+    * layers deepest first (head = the last, possibly empty, layer). */
+  private def localSigmaBfs(adj: java.util.HashMap[String, Array[String]],
+      s: String, maxDepth: Int): (scala.collection.mutable.Map[String, Int],
+      scala.collection.mutable.Map[String, Long], List[List[String]]) = {
+    val dist = scala.collection.mutable.Map(s -> 0)
+    val sigma = scala.collection.mutable.Map(s -> 1L)
+    var layers = List(List(s))
+    var depth = 0
+    while (depth < maxDepth && layers.head.nonEmpty) {
+      depth += 1
+      val next = ArrayBuffer.empty[String]
+      for (u <- layers.head; v <- adj.getOrDefault(u, Array.empty)) {
+        dist.get(v) match {
+          case None => dist(v) = depth; sigma(v) = sigma(u); next += v
+          case Some(dv) if dv == depth => sigma(v) += sigma(u)
+          case _ => ()
+        }
+      }
+      layers = next.distinct.toList :: layers
+    }
+    (dist, sigma, layers)
+  }
+
   /** Multi-source BFS with shortest-path counting — the Brandes
     * forward phase, exposed because the exact pair-sum betweenness
     * formulation (see `d_dup_betweenness`) and any σ-weighted path
@@ -1524,37 +1531,11 @@ object GraphAlgorithms {
         .collect().map(_.getString(0))
       val nAdj = und.select("a").distinct().count()
       if (srcs.length.toLong * math.max(nAdj, 1L) <= 4000000L) {
-        val adj = new java.util.HashMap[String, Array[String]]()
-        locally {
-          val tmp = scala.collection.mutable.Map
-            .empty[String, scala.collection.mutable.ArrayBuffer[String]]
-          und.collect().foreach { r =>
-            tmp.getOrElseUpdate(r.getString(0),
-              scala.collection.mutable.ArrayBuffer.empty) += r.getString(1)
-          }
-          tmp.foreach { case (k, v) => adj.put(k, v.toArray) }
-        }
+        val adj = localAdjacency(und)
         und.unpersist()
         val rows = Seq.newBuilder[(String, String, Int, Long)]
         for (s <- srcs) {
-          val dist = scala.collection.mutable.Map(s -> 0)
-          val sigma = scala.collection.mutable.Map(s -> 1L)
-          var frontier = List(s)
-          var depth = 0
-          while (depth < maxDepth && frontier.nonEmpty) {
-            depth += 1
-            val next = scala.collection.mutable.ArrayBuffer.empty[String]
-            for (u <- frontier; v <- adj.getOrDefault(u, Array.empty)) {
-              dist.get(v) match {
-                case None =>
-                  dist(v) = depth; sigma(v) = sigma(u); next += v
-                case Some(dv) if dv == depth =>
-                  sigma(v) += sigma(u)
-                case _ => ()
-              }
-            }
-            frontier = next.distinct.toList
-          }
+          val (dist, sigma, _) = localSigmaBfs(adj, s, maxDepth)
           dist.foreach { case (v, dv) => rows += ((s, v, dv, sigma(v))) }
         }
         import spark.implicits._
@@ -1584,6 +1565,21 @@ object GraphAlgorithms {
     visited
   }
 
+  /** Betweenness centrality (GDS `gds.betweenness` parity), sampled
+    * Brandes, DataFrame-native. `sources` is the pivot set as a
+    * DataFrame (first column) — the distributed-seed shape; exact
+    * betweenness = pass every vertex. Forward phase: one multi-source
+    * BFS keyed (source, vertex) accumulating σ (shortest-path counts,
+    * exact longs) layer by layer — one equi-join + partial-agg per
+    * layer, all sources advance together. Backward phase: dependency
+    * accumulation δ from the deepest layer up, one join per layer.
+    * σ stays integral; δ is rational so the final score is a double,
+    * rounded to `scale` decimals for run-stable output.
+    *
+    * Returns (id, betweenness) — raw ordered-pair dependency sums
+    * (GDS convention; undirected symmetric pairs are counted twice,
+    * callers sampling k of n sources scale by n/k).
+    */
   def betweennessDF(edges: DataFrame, src: String, dst: String,
       sources: DataFrame, maxDepth: Int = 30, scale: Int = 6,
       localThreshold: Long = 1000000L): DataFrame = {
@@ -1609,39 +1605,17 @@ object GraphAlgorithms {
         .collect().map(_.getString(0))
       val nAdj = und.select("a").distinct().count()
       if (srcs.length.toLong * math.max(nAdj, 1L) <= 4000000L) {
-        val adj = scala.collection.mutable.Map
-          .empty[String, scala.collection.mutable.ArrayBuffer[String]]
-        und.collect().foreach { r =>
-          adj.getOrElseUpdate(r.getString(0),
-            scala.collection.mutable.ArrayBuffer.empty) += r.getString(1)
-        }
+        val adj = localAdjacency(und)
         und.unpersist()
         val bet = scala.collection.mutable.Map.empty[String, Double]
         val emitted = scala.collection.mutable.Set.empty[String]
         for (s <- srcs) {
-          val dist = scala.collection.mutable.Map(s -> 0)
-          val sigma = scala.collection.mutable.Map(s -> 1L)
-          var layers = List(List(s))
-          var depth = 0
-          while (depth < maxDepth && layers.head.nonEmpty) {
-            depth += 1
-            val next = scala.collection.mutable.ArrayBuffer.empty[String]
-            for (u <- layers.head;
-                 v <- adj.getOrElse(u, ArrayBuffer.empty)) {
-              dist.get(v) match {
-                case None =>
-                  dist(v) = depth; sigma(v) = sigma(u); next += v
-                case Some(dv) if dv == depth => sigma(v) += sigma(u)
-                case _ => ()
-              }
-            }
-            layers = next.distinct.toList :: layers
-          }
+          val (dist, sigma, layers) = localSigmaBfs(adj, s, maxDepth)
           // backward: deepest layer first; δ_u += σ_u/σ_w · (1+δ_w)
           val delta = scala.collection.mutable.Map
             .empty[String, Double].withDefaultValue(0.0)
           for (layer <- layers.dropRight(1); w <- layer;
-               u <- adj.getOrElse(w, ArrayBuffer.empty)
+               u <- adj.getOrDefault(w, Array.empty)
                if dist.get(u).contains(dist(w) - 1)) {
             delta(u) += sigma(u).toDouble / sigma(w) * (1.0 + delta(w))
           }
@@ -1695,7 +1669,6 @@ object GraphAlgorithms {
     out
   }
 
-  /** Label propagation communities (GDS parity; k iterations). */
   /** Per-vertex degree over an undirected pair list (GDS degree
     * centrality parity): distinct neighbors, self-loops dropped. One
     * symmetrize + one fixed-width-key groupBy — the cheapest
@@ -2066,7 +2039,7 @@ object GraphAlgorithms {
     // floor either way
     withGraphShuffle(spark, nE, perPartition = 500000L) {
     // Dense-long iteration space (r16 opt): the peel's trim passes,
-    // both minProp fixpoints, and the pair-class edge drops all
+    // both reach fixpoints, and the pair-class edge drops all
     // exchange/sort/aggregate V- and E-sized frames every round —
     // encode ids through the order-preserving dictionary once, run
     // the whole peel on longs, decode the final labels (see
@@ -2086,72 +2059,20 @@ object GraphAlgorithms {
     // re-materialized (every consumer scan is a cheap column prune)
     val verts0 = dict.select(col("vid").as("id"))
     es.unpersist()
-    // Min-label propagation fixpoint with the doubling shortcut:
-    // lbl(v) = min over {v} ∪ {u : u →* v in e}. One edge hop + one
-    // label hop per round → O(log diameter) rounds.
-    // e must arrive pre-partitioned on `a` (partitionedCheckpoint —
-    // done SERIALLY by the caller: the helper toggles a session conf,
-    // and the fwd/bwd fixpoints run as concurrent futures)
-    def minProp(eP: DataFrame, verts: DataFrame): DataFrame = {
-      val tProp = System.nanoTime()
-      // label init stays LAZY (r16): `verts` is already a checkpoint
-      // (or a cheap projection of one), and round 1 scans this frame
-      // exactly once per orientation — an eager copy here paid two
-      // V-sized materializations per outer round for nothing
-      var lbl = verts.withColumn("lbl", col("id"))
-      // DELTA-SOURCED edge hop (r15 opt, guide §2.3): labels only ever
-      // DECREASE, so an unchanged source's contribution is already
-      // folded into its neighbors' labels — the hop only needs edges
-      // OUT OF last round's changed set. `chg` is a lazy filtered
-      // scan of the round checkpoint (no extra job, no extra frame);
-      // on a long-diameter tail (the 10M tier's condensation chain
-      // beside millions of already-converged cycles) the late rounds'
-      // join+aggregate shrink from V-sized to frontier-sized. A
-      // heavier variant (broadcast frontier + delta pointer-doubling
-      // with trigger-set bookkeeping) was built and MEASURED WORSE
-      // same-window (xdist_scc 22.4 → 31.4 s at 1.2M edges: ~5 extra
-      // driver jobs per round outweigh the avoided exchanges at
-      // in-memory frame sizes), so the doubling below stays full.
-      var chg = lbl // rows whose label changed last round (all, at start)
-      var converged = false
-      var i = 0
-      while (!converged && i < maxIter) {
-        val tRound = System.nanoTime()
-        val nbrMin = eP
-          .join(chg.select(col("id").as("a"), col("lbl").as("albl")), "a")
-          .groupBy(col("b").as("id")).agg(min("albl").as("nbr"))
-        val hop = lbl.withColumnRenamed("lbl", "old")
-          .join(nbrMin, Seq("id"), "left")
-          .select(col("id"),
-            least(col("old"), coalesce(col("nbr"), col("old"))).as("lbl"),
-            col("old"))
-          .localCheckpoint(eager = true)
-        // lbl(v) ← min(lbl(v), lbl(lbl(v))): lbl(v) reaches v and
-        // lbl(lbl(v)) reaches lbl(v), so the composed hop is a real
-        // reachability — labels cross 2^i hops after i rounds. The
-        // chg flag rides the checkpoint (louvainDF's trick), so the
-        // convergence test is a scan of materialized partitions, not
-        // a re-join against the previous round.
-        val dbl = least(col("lbl"), coalesce(col("_plbl"), col("lbl")))
-        val next = hop
-          .join(hop.select(col("id").as("_p"), col("lbl").as("_plbl")),
-            col("lbl") === col("_p"), "left")
-          .select(col("id"), dbl.as("lbl"),
-            (dbl =!= col("old")).as("chg"))
-          .localCheckpoint(eager = true)
-        val changed = next.where(col("chg")).limit(1).count()
-        lbl = next.select("id", "lbl")
-        chg = next.where(col("chg")).select(col("id"), col("lbl"))
-        converged = changed == 0
-        i += 1
-        System.err.println(f"[scc] minProp round $i: " +
-          f"${(System.nanoTime() - tRound) / 1e9}%.1f s")
-      }
+    // Min-label reach along e: lbl(v) = min over {v} ∪ {u : u →* v},
+    // pointer-doubled → O(log diameter) rounds. e must arrive
+    // pre-partitioned on `a` (partitionedCheckpoint — done SERIALLY
+    // by the caller: the helper toggles a session conf, and the
+    // fwd/bwd fixpoints run as concurrent futures). The label init
+    // stays LAZY (r16): `verts` is already a checkpoint (or a cheap
+    // projection of one), scanned once by round 1 — an eager copy
+    // paid two V-sized materializations per outer round for nothing.
+    def reach(eP: DataFrame, verts: DataFrame): DataFrame = {
+      val (lbl, converged) = minPropagate(eP,
+        verts.withColumn("v", col("id")), maxIter, jump = true)
       if (!converged) throw new IllegalStateException(
         s"scc min-label propagation did not converge in $maxIter rounds")
-      System.err.println(f"[scc] minProp: $i rounds in " +
-        f"${(System.nanoTime() - tProp) / 1e9}%.1f s")
-      lbl
+      lbl.withColumnRenamed("v", "lbl")
     }
     var alive = verts0
     var e = e0 // already self-loop-free, and endpoints ⊆ verts0
@@ -2163,7 +2084,6 @@ object GraphAlgorithms {
       // sources/sinks; anything deeper is the propagation's job.
       var trimming = true
       var trimRounds = 0
-      val tTrim = System.nanoTime()
       while (trimming && trimRounds < 3) {
         // single-shuffle degree test: present as source AND as sink
         val keep = e
@@ -2209,8 +2129,6 @@ object GraphAlgorithms {
         }
         trimRounds += 1
       }
-      System.err.println(f"[scc] round $round trim: $trimRounds passes " +
-        f"in ${(System.nanoTime() - tTrim) / 1e9}%.1f s")
       if (alive.limit(1).count() > 0) {
         // fwd and bwd are independent fixpoints over the same edges —
         // run them as concurrent job streams: the rounds are
@@ -2222,20 +2140,16 @@ object GraphAlgorithms {
           import scala.concurrent.duration.Duration
           import scala.concurrent.ExecutionContext.Implicits.global
           // pre-partition both orientations SERIALLY (the helper
-          // scopes a session conf — see minProp's contract), then run
+          // scopes a session conf — see reach's contract), then run
           // the two fixpoints as concurrent job streams: each round
           // exchanges only its label frame (guide §2.4)
-          val tPart = System.nanoTime()
           val eF = partitionedCheckpoint(e, "a")
           val eB = partitionedCheckpoint(
             e.select(col("b").as("a"), col("a").as("b")), "a")
-          System.err.println(f"[scc] round $round edge partition: " +
-            f"${(System.nanoTime() - tPart) / 1e9}%.1f s")
-          val f = Future(minProp(eF, alive))
-          val g = Future(minProp(eB, alive))
+          val f = Future(reach(eF, alive))
+          val g = Future(reach(eB, alive))
           (Await.result(f, Duration.Inf), Await.result(g, Duration.Inf))
         }
-        val tPeel = System.nanoTime()
         val both = fwd.join(bwd.withColumnRenamed("lbl", "blbl"), "id")
           .localCheckpoint(eager = true)
         val scc = both.where(col("lbl") === col("blbl"))
@@ -2256,16 +2170,9 @@ object GraphAlgorithms {
           .select("a", "b")
           .join(alive.select(col("id").as("a")), Seq("a"), "left_semi")
           .localCheckpoint(eager = true)
-        System.err.println(f"[scc] round $round peel+drop: " +
-          f"${(System.nanoTime() - tPeel) / 1e9}%.1f s")
       }
       round += 1
     }
-    // scale-shape evidence for off-gate runs (the 10M-edge bench
-    // tier's round-count claim reads from here): outer peel rounds
-    // stay O(1) on trim+pair-drop-compressible condensations
-    System.err.println(
-      s"[scc] distributed peel finished: $round outer rounds, $nE edges")
     if (alive.limit(1).count() > 0) throw new IllegalStateException(
       s"stronglyConnectedComponentsDF did not peel all SCCs in $maxIter " +
         "rounds; raise maxIter (trim + pair-class dropping compress " +
@@ -2285,6 +2192,7 @@ object GraphAlgorithms {
     }
   }
 
+  /** Label propagation communities (GDS parity; k iterations). */
   def labelPropagation(pairs: DataFrame, src: String, dst: String,
       iterations: Int = 5): DataFrame = {
     val spark = pairs.sparkSession

@@ -220,6 +220,25 @@ class GraphAlgorithmsSpec extends AnyFunSuite {
       assert(local == dist,
         s"BFS divergence (directed=$dir maxDepth=$maxDepth)")
     }
+    // vertex domain = endpoints ∪ seeds: a seed absent from the edge
+    // list ("z") is at distance 0 on both paths, and a duplicated seed
+    // (a DataFrame seed set is not deduplicated upstream) yields one row
+    val seedDf = Seq("a", "z", "a").toDF("seed")
+    for (dir <- Seq(false, true)) {
+      val runs = Seq(1000000L, 0L).map { thr =>
+        val w = GraphAlgorithms.weightedShortestPathsDF(edges, "s", "t", "w",
+          seedDf, maxIter = 64, directed = dir, localThreshold = thr)
+        val b = GraphAlgorithms.shortestPathsDF(edges, "s", "t", seedDf,
+          maxDepth = 30, directed = dir, localThreshold = thr)
+        assert(w.count() == toL(w).size && b.count() == toI(b).size,
+          s"one row per vertex (directed=$dir threshold=$thr)")
+        (toL(w), toI(b))
+      }
+      assert(runs(0) == runs(1), s"seed-domain divergence (directed=$dir)")
+      val (w, b) = runs(0)
+      assert(w("z") == 0L && w("a") == 0L && w("b") == 3L)
+      assert(b("z") == 0 && b("a") == 0 && b("b") == 1)
+    }
   }
 
   test("non-ASCII ids: local replays order like Spark UTF8String") {
@@ -835,6 +854,38 @@ class GraphAlgorithmsSpec extends AnyFunSuite {
     val sizes = local.groupBy(_._2).map(_._2.size).toSeq
     assert(sizes.length == 40 && sizes.forall(_ == 6),
       "every six-cycle is its own SCC despite the links")
+  }
+
+  test("orderedVertexDict: vid == global sort rank when AQE coalesces") {
+    // The SCC peel's dense-long encoding is an order isomorphism only
+    // if zipWithIndex over the sorted checkpoint numbers rows in global
+    // sort order. AQE coalesces the sort's range partitions (adjacent
+    // ranges merge); pin the ranks at a width where coalescing really
+    // happens. Byte-skewed ids (long ids in the low key range, short
+    // ones above) make the coalesced partitions uneven.
+    val s = spark.newSession() // scoped conf: the shared session keeps its own
+    val width = 200
+    s.conf.set("spark.sql.shuffle.partitions", width.toString)
+    s.conf.set("spark.sql.adaptive.enabled", "true")
+    s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+    s.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+    s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16k")
+    s.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1k")
+    val rnd = new scala.util.Random(7)
+    val ids = (0 until 20000).map { i =>
+      f"v$i%05d" + (if (i < 2000) rnd.alphanumeric.take(200).mkString else "")
+    }
+    val dict = GraphAlgorithms.orderedVertexDict(
+      s.createDataFrame(rnd.shuffle(ids).map(Tuple1(_))).toDF("id"))
+    val parts = dict.rdd.getNumPartitions
+    assert(parts > 1 && parts < width,
+      s"the sort shuffle must be coalesced, got $parts of $width partitions")
+    val got = dict.collect().map(r => r.getString(0) -> r.getLong(1))
+      .sortBy(_._2)
+    val want = ids.sorted(GraphAlgorithms.utf8Ordering)
+    assert(got.length == want.length)
+    val bad = want.indices.find(i => got(i) != (want(i) -> i.toLong))
+    assert(bad.isEmpty, s"vid != sort rank at ${bad.map(i => (i, got(i)))}")
   }
 
   test("weighted integer pagerank: weights steer mass; w≡1 ≡ unweighted; " +
